@@ -304,6 +304,14 @@ def cmd_harvest(args) -> None:
     print(f"harvested {args.pages}: records table now {n} rows")
 
 
+# the extractor columns the verify battery below reads, fallbacks included
+_VERIFY_SOURCE_COLUMNS = (
+    "format", "access_restrictions", "isbn", "unique_ids", "issn",
+    "publish_year", "publishDate", "page_count", "series_issn",
+    "series_numbering", "title", "author",
+)
+
+
 def cmd_deduplicate(args) -> None:
     spark = _spark("rm-dedup")
     from .operators.dedup import deduplicate, with_dedup_keys
@@ -314,7 +322,13 @@ def cmd_deduplicate(args) -> None:
         if len(fmts) != 1:
             raise SystemExit(f"--format required (table has {sorted(fmts)})")
         args.format = fmts[0]
-    wide = extract_wide(records, args.format)
+    if args.format.lower() in ("marc", "marcxml"):
+        # build only the battery's columns (the other extractors'
+        # to_solr_columns take no ``only``); names the MARC extractor
+        # lacks are skipped and read as absent below
+        wide = extract_wide(records, args.format, only=_VERIFY_SOURCE_COLUMNS)
+    else:
+        wide = extract_wide(records, args.format)
     types = dict(wide.dtypes)
 
     def scalar(name, *alts):

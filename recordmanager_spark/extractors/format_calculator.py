@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from recordmanager_spark.sparkcompat import let1
 
 # ---------------------------------------------------------------------------
 # Python model (reference-faithful; used for tests and documentation)
@@ -371,11 +372,12 @@ def _subfield_eq(field: Column, code: str) -> Column:
 
 def format_col(marc: Column) -> Column:
     """array<string> of record formats — the Column twin of
-    ``formats_as_list`` over the parsed MARC struct (leader + fields)."""
+    ``formats_as_list`` over the parsed MARC struct (leader + fields).
+
+    The record-level cues the tree reads more than once are bound once
+    (``let1`` over one struct) and the tree reads them by field name."""
     fields = marc["fields"]
     leader = F.coalesce(marc["leader"], F.lit(""))
-    rtype = F.lower(F.substring(leader, 7, 1))
-    blevel = F.lower(F.substring(leader, 8, 1))
 
     def ctl(tag: str) -> Column:
         vals = F.filter(
@@ -383,18 +385,47 @@ def format_col(marc: Column) -> Column:
         )
         return F.coalesce(F.try_element_at(vals, F.lit(1))["value"], F.lit(""))
 
-    f008 = ctl("008")
-    f007s = F.transform(
-        F.filter(fields, lambda f: (f["tag"] == "007") & f["value"].isNotNull()),
-        lambda f: F.lower(f["value"]),
-    )
-
     def has_tag(tag: str) -> Column:
         return F.exists(fields, lambda f: f["tag"] == tag)
 
-    has_086 = has_tag("086")
-    is_thesis = has_tag("502")
-    is_conference = has_tag("111") | has_tag("711")
+    def _33x_match(tag: str, desc: str, code: str, source: str) -> Column:
+        return F.exists(
+            fields,
+            lambda f: (f["tag"] == tag)
+            & ((_subfield_eq(f, "a") == desc) | (_subfield_eq(f, "b") == code))
+            & (_subfield_eq(f, "2") == source),
+        )
+
+    cues = F.struct(
+        F.lower(F.substring(leader, 7, 1)).alias("rtype"),
+        F.lower(F.substring(leader, 8, 1)).alias("blevel"),
+        ctl("008").alias("f008"),
+        F.transform(
+            F.filter(
+                fields, lambda f: (f["tag"] == "007") & f["value"].isNotNull()
+            ),
+            lambda f: F.lower(f["value"]),
+        ).alias("f007s"),
+        has_tag("502").alias("is_thesis"),
+        (has_tag("111") | has_tag("711")).alias("is_conference"),
+        _33x_match("338", "online resource", "cr", "rdacarrier").alias(
+            "online_338"
+        ),
+        _33x_match(
+            "336", "two-dimensional moving image", "tdi", "rdacontent"
+        ).alias("video_336"),
+    )
+    return let1(cues, lambda cue: _format_tree(fields, cue))
+
+
+def _format_tree(fields: Column, cue: Column) -> Column:
+    """The decision tree of :func:`format_col` over its bound cues."""
+    rtype, blevel = cue["rtype"], cue["blevel"]
+    f008, f007s = cue["f008"], cue["f007s"]
+    is_thesis, is_conference = cue["is_thesis"], cue["is_conference"]
+    online_338, video_336 = cue["online_338"], cue["video_336"]
+
+    has_086 = F.exists(fields, lambda f: f["tag"] == "086")
     serial_host = F.exists(
         fields,
         lambda f: (f["tag"] == "773")
@@ -414,17 +445,6 @@ def format_col(marc: Column) -> Column:
         )["value"],
         F.lit(""),
     )
-
-    def _33x_match(tag: str, desc: str, code: str, source: str) -> Column:
-        return F.exists(
-            fields,
-            lambda f: (f["tag"] == tag)
-            & ((_subfield_eq(f, "a") == desc) | (_subfield_eq(f, "b") == code))
-            & (_subfield_eq(f, "2") == source),
-        )
-
-    online_338 = _33x_match("338", "online resource", "cr", "rdacarrier")
-    video_336 = _33x_match("336", "two-dimensional moving image", "tdi", "rdacontent")
 
     is_electronic = (
         F.lower(f245_h).contains("[electronic resource]")
@@ -555,7 +575,12 @@ def format_col(marc: Column) -> Column:
         .when(rtype == "a", "Text")
         .otherwise("Unknown")
     )
-    withfb = F.when(F.size(candidates) == 0, F.array(fallback)).otherwise(candidates)
+    withfb = let1(
+        candidates,
+        lambda cands: F.when(F.size(cands) == 0, F.array(fallback)).otherwise(
+            cands
+        ),
+    )
     # order-preserving dedup (getFormats: array_unique keeps first occurrence)
     return F.aggregate(
         withfb,

@@ -40,7 +40,7 @@ from pyspark.sql.types import (
 from ..functions import geo as GEOF
 from ..functions import keys as K
 from .format_calculator import format_col
-from recordmanager_spark.sparkcompat import try_element_at
+from recordmanager_spark.sparkcompat import let1, try_element_at
 
 # False in this module; the SQL-text twin (recordmanager_spark.sqltwin)
 # overrides it to True so twin instances never recurse into themselves.
@@ -253,16 +253,6 @@ def fields_by_tag(marc: Column, tag: str) -> Column:
     return F.filter(marc["fields"], lambda f: f["tag"] == tag)
 
 
-def _let1(value: Column, body) -> Column:
-    """Let-bind ``value`` through a one-element array transform: the
-    body reads it as a lambda variable, so however many times the body
-    references it the value's tree appears in the plan exactly once.
-    Expression trees duplicate per reference (both Column-API and the
-    SQL-text twin), so fan-out over a big subtree multiplies analyzer
-    and codegen cost — the r6 work-keys fix, packaged (opt r12)."""
-    return try_element_at(F.transform(F.array(value), body), 1)
-
-
 def control_value(marc: Column, tag: str) -> Column:
     """First control-field value for the tag ('' if absent)."""
     vals = F.filter(
@@ -340,11 +330,9 @@ def linked_alt_values(
     some original field of `tag` carries $6 "880-occ...". Pure array exprs.
     """
     # occurrences referenced by original fields of this tag
-    occs = F.transform(
-        F.filter(
-            fields_by_tag(marc, tag), lambda f: _field_link_occ(f) != ""
-        ),
-        _field_link_occ,
+    occs = F.filter(
+        F.transform(fields_by_tag(marc, tag), _field_link_occ),
+        lambda o: o != "",
     )
     linked = F.filter(
         marc["fields"],
@@ -431,7 +419,12 @@ def _field_title(field: Column, for_filing: bool) -> Column:
     if for_filing:
         nf = F.coalesce(field["ind2"], F.lit(" "))
         nfn = F.when(nf.rlike("^[1-9]$"), nf.cast("int")).otherwise(F.lit(0))
-        a = F.when(nfn > 0, F.substr(a, nfn + 1, F.length(a))).otherwise(a)
+        a = let1(
+            F.struct(a.alias("a"), nfn.alias("n")),
+            lambda x: F.when(
+                x["n"] > 0, F.substr(x["a"], x["n"] + 1, F.length(x["a"]))
+            ).otherwise(x["a"]),
+        )
     accept = ("b", "n", "p", "c") if for_filing else ("b", "n", "p")
 
     def step(acc, s):
@@ -458,24 +451,26 @@ def marc_title(marc: Column, for_filing: bool = False) -> Column:
         """struct(t, c) for one tag — the raw title tree and the
         punctuation-stripped fan-out each let-bound so the (large)
         _field_title/strip chains appear in the plan once, not the
-        ~17x an inlined build multiplied them to (opt r12)."""
-        fld = try_element_at(fields_by_tag(marc, tag), 1)
-        raw = _field_title(fld, for_filing)
+        ~17x an inlined build multiplied them to (opt r12); the field
+        itself is bound too, as the title tree reads it 3-5 times."""
 
-        def mk_t(v: Column) -> Column:
-            t = F.lower(K.strip_punctuation(v)) if for_filing else v
-            return F.when(fld.isNotNull(), t).otherwise(F.lit(None))
+        def of_field(fld: Column) -> Column:
+            def mk_t(v: Column) -> Column:
+                t = F.lower(K.strip_punctuation(v)) if for_filing else v
+                return F.when(fld.isNotNull(), t).otherwise(F.lit(None))
 
-        return _let1(
-            _let1(raw, mk_t),
-            lambda t: F.struct(
-                t.alias("t"), K.strip_trailing_punctuation(t).alias("c")
-            ),
-        )
+            return let1(
+                let1(_field_title(fld, for_filing), mk_t),
+                lambda t: F.struct(
+                    t.alias("t"), K.strip_trailing_punctuation(t).alias("c")
+                ),
+            )
 
-    return _let1(
+        return let1(try_element_at(fields_by_tag(marc, tag), 1), of_field)
+
+    return let1(
         one("245"),
-        lambda s1: _let1(
+        lambda s1: let1(
             one("240"),
             lambda s2: (
                 F.when(F.coalesce(s1["c"], F.lit("")) != "", s1["c"])
@@ -523,8 +518,13 @@ def marc_full_title(marc: Column) -> Column:
     full = get_field_subfields(
         marc, "245", ["a", "b", "c", "f", "g", "h", "k", "n", "p", "s"]
     )
-    stripped = K.strip_trailing_punctuation(full)
-    return F.when(stripped == "", full).otherwise(stripped)
+    return let1(
+        full,
+        lambda f: let1(
+            K.strip_trailing_punctuation(f),
+            lambda st: F.when(st == "", f).otherwise(st),
+        ),
+    )
 
 
 def marc_publishers(marc: Column) -> Column:
@@ -540,11 +540,13 @@ def marc_publishers(marc: Column) -> Column:
     first_b = try_element_at(
         F.flatten(F.transform(f264, lambda f: _sub_values(f, ["b"]))), 1
     )
-    p264 = F.when(
-        first_b.isNotNull(),
-        F.array(K.strip_trailing_punctuation(first_b)),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.when(F.size(p260) > 0, p260).otherwise(p264)
+    p264 = let1(
+        first_b,
+        lambda b: F.when(
+            b.isNotNull(), F.array(K.strip_trailing_punctuation(b))
+        ).otherwise(F.array().cast("array<string>")),
+    )
+    return let1(p260, lambda p: F.when(F.size(p) > 0, p).otherwise(p264))
 
 
 def marc_isbns(marc: Column) -> Column:
@@ -565,15 +567,25 @@ def marc_publish_year(marc: Column) -> Column:
     y008 = F.substring(control_value(marc, "008"), 8, 4)
     y260 = F.regexp_extract(get_field_subfields(marc, "260", ["c"]), "(\\d{4})", 1)
     y264 = F.regexp_extract(get_field_subfields(marc, "264", ["c"]), "(\\d{4})", 1)
-    return F.when(y008.rlike("^\\d{4}$"), y008).otherwise(
-        F.when(y260 != "", y260).otherwise(F.when(y264 != "", y264))
+    # each candidate is read twice: bound, and nested so a later one is
+    # only computed when the earlier ones fail
+    return let1(
+        y008,
+        lambda a: F.when(a.rlike("^\\d{4}$"), a).otherwise(
+            let1(
+                y260,
+                lambda b: F.when(b != "", b).otherwise(
+                    let1(y264, lambda c: F.when(c != "", c))
+                ),
+            )
+        ),
     )
 
 
 def marc_page_count(marc: Column) -> Column:
     """First number in 300 $a (getPageCount → MetadataUtils extract)."""
     digits = F.regexp_extract(get_field_subfields(marc, "300", ["a"]), "(\\d+)", 1)
-    return F.when(digits != "", digits.cast("int"))
+    return let1(digits, lambda d: F.when(d != "", d.cast("int")))
 
 
 def marc_allfields(marc: Column) -> Column:
@@ -639,22 +651,24 @@ def normalize_relator(v: Column) -> Column:
 def _linked_terms_for_field(marc: Column, tag: str, field: Column, codes) -> Column:
     """880 terms linked to THIS field via its $6 occurrence — the reference
     appends them to the same name string (Marc.php:2270-2280)."""
-    occ = _field_link_occ(field)
-    linked = F.filter(
-        marc["fields"],
-        lambda f: (f["tag"] == "880")
-        & (occ != "")
-        & F.exists(
-            F.coalesce(f["subfields"], F.array()),
-            lambda s: (s["code"] == "6")
-            & s["value"].startswith(tag + "-")
-            & (_occurrence(s["value"]) == occ),
-        ),
-    )
-    return F.filter(
-        F.transform(linked, lambda f: subfield_join(f, list(codes))),
-        lambda v: v != "",
-    )
+    def of_occ(occ: Column) -> Column:
+        linked = F.filter(
+            marc["fields"],
+            lambda f: (f["tag"] == "880")
+            & (occ != "")
+            & F.exists(
+                F.coalesce(f["subfields"], F.array()),
+                lambda s: (s["code"] == "6")
+                & s["value"].startswith(tag + "-")
+                & (_occurrence(s["value"]) == occ),
+            ),
+        )
+        return F.filter(
+            F.transform(linked, lambda f: subfield_join(f, list(codes))),
+            lambda v: v != "",
+        )
+
+    return let1(_field_link_occ(field), of_occ)
 
 
 def authors_by_relator(
@@ -717,16 +731,9 @@ def authors_by_relator(
                     ).alias("a"),
                 )
 
-            return try_element_at(
-                F.transform(
-                    F.array(
-                        F.struct(
-                            frel0.alias("f"), terms0.alias("t"), linked0.alias("l")
-                        )
-                    ),
-                    build,
-                ),
-                1,
+            return let1(
+                F.struct(frel0.alias("f"), terms0.alias("t"), linked0.alias("l")),
+                build,
             )
 
         return mk
@@ -745,19 +752,16 @@ def authors_by_relator(
     # it three times, and Column trees duplicate per reference — inlined,
     # each author column carried a 3x copy of the whole per-tag match tree
     # (tens of kB of expression nodes per column; measurable analyzer time)
-    return try_element_at(
-        F.transform(
-            F.array(entries),
-            lambda e: F.struct(
-                F.transform(e, lambda s: s["name"]).alias("names"),
-                F.transform(e, lambda s: s["rel"]).alias("relators"),
-                F.filter(
-                    F.transform(e, lambda s: K.author_initials(s["a"])),
-                    lambda v: v != "",
-                ).alias("variants"),
-            ),
+    return let1(
+        entries,
+        lambda e: F.struct(
+            F.transform(e, lambda s: s["name"]).alias("names"),
+            F.transform(e, lambda s: s["rel"]).alias("relators"),
+            F.filter(
+                F.transform(e, lambda s: K.author_initials(s["a"])),
+                lambda v: v != "",
+            ).alias("variants"),
         ),
-        1,
     )
 
 
@@ -944,104 +948,102 @@ def marc_unique_ids(marc: Column) -> Column:
             try_element_at(_sub_values(field, [code]), 1), F.lit("")
         )
 
-    f010 = first_field("010")
-    # every normalize_key below is a multi-KB fold tree and the id
-    # assembly reads each key 2-3x — let-bind through structs so each
-    # fold appears in the plan once (opt r12; trees duplicate per
-    # reference)
-    ids_010 = _let1(
-        F.struct(
-            K.normalize_key(sub1(f010, "a")).alias("l"),
-            K.normalize_key(sub1(f010, "b")).alias("n"),
-        ),
-        lambda s: F.filter(
-            F.array(
-                F.when(s["l"] != "", F.concat(F.lit("(lccn)"), s["l"])),
-                F.when(
-                    (s["n"] != "") & (s["l"] != ""),
-                    F.concat(F.lit("(nucmc)"), s["l"]),
+    f010, f015 = first_field("010"), first_field("015")
+    f016, f024 = first_field("016"), first_field("024")
+    # one struct of every raw input, bound once; all values then pass
+    # normalize_key in ONE transform, so its multi-KB fold tree (kana
+    # map literal included) appears in the plan once instead of six times
+    raw = F.struct(
+        sub1(f010, "a").alias("l"),
+        sub1(f010, "b").alias("n"),
+        sub1(f015, "a").alias("a015"),
+        sub1(f015, "2").alias("s015"),
+        sub1(f016, "a").alias("a016"),
+        sub1(f016, "2").alias("s016"),
+        sub1(f024, "a").alias("a024"),
+        F.coalesce(f024["ind1"], F.lit(" ")).alias("i024"),
+        sub1(f024, "2").alias("s024"),
+        F.filter(
+            F.transform(
+                fields_by_tag(marc, "035"),
+                lambda f: F.coalesce(
+                    try_element_at(_sub_values(f, ["a"]), 1), F.lit("")
                 ),
             ),
-            lambda v: v.isNotNull(),
+            lambda a: a.rlike(_SCN_RE),
+        ).alias("scn"),
+    )
+    return let1(raw, _unique_ids_of)
+
+
+def _unique_ids_of(x: Column) -> Column:
+    """:func:`marc_unique_ids` over its bound raw inputs ``x``."""
+    a024, ind1 = x["a024"], x["i024"]
+    ian_nr = F.when(
+        F.instr(a024, " ") > 1, F.substring(a024, 1, F.instr(a024, " ") - 1)
+    ).otherwise(a024)
+    # keys 1-5: lccn, nucmc, 015, 016, 024; then the 035 numbers
+    keys = F.transform(
+        F.concat(
+            F.array(
+                x["l"], x["n"], x["a015"], x["a016"],
+                F.when(ind1 == "3", ian_nr).otherwise(a024),
+            ),
+            x["scn"],
         ),
+        lambda v: K.normalize_key(v),
     )
 
-    def qualified(tag):
-        fld = first_field(tag)
-        return _let1(
-            F.struct(
-                K.normalize_key(sub1(fld, "a")).alias("nr"),
-                sub1(fld, "2").alias("src"),
-            ),
-            lambda s: F.filter(
-                F.array(
-                    F.when(
-                        (s["nr"] != "") & (s["src"] != ""),
-                        F.concat(F.lit("("), s["src"], F.lit(")"), s["nr"]),
-                    )
-                ),
-                lambda v: v.isNotNull(),
+    def ids_of(k: Column) -> Column:
+        lccn, nucmc = try_element_at(k, 1), try_element_at(k, 2)
+        ids_010 = F.array(
+            F.when(lccn != "", F.concat(F.lit("(lccn)"), lccn)),
+            F.when(
+                (nucmc != "") & (lccn != ""), F.concat(F.lit("(nucmc)"), lccn)
             ),
         )
 
-    f024 = first_field("024")
+        def qualified(nr: Column, src: Column) -> Column:
+            return F.array(
+                F.when(
+                    (nr != "") & (src != ""),
+                    F.concat(F.lit("("), src, F.lit(")"), nr),
+                )
+            )
 
-    def ids_024_of(x: Column) -> Column:
-        raw, ind1 = x["raw"], x["i"]
-        ian_nr = F.when(
-            F.instr(raw, " ") > 1, F.substring(raw, 1, F.instr(raw, " ") - 1)
-        ).otherwise(raw)
         src24 = (
             F.when(ind1 == "0", "istc")
             .when(ind1 == "1", "upc")
             .when(ind1 == "2", "ismn")
             .when(ind1 == "3", "ian")
             .when(ind1 == "4", "sici")
-            .when(ind1 == "7", x["s2"])
+            .when(ind1 == "7", x["s024"])
             .otherwise("")
         )
-        nr0 = K.normalize_key(F.when(ind1 == "3", ian_nr).otherwise(raw))
-        return _let1(
-            F.struct(src24.alias("src"), nr0.alias("nr0")),
-            lambda y: _let1(
+        ids_024 = let1(
+            F.struct(src24.alias("src"), try_element_at(k, 5).alias("nr0")),
+            lambda y: let1(
                 F.when(
                     (y["src"] == "ismn") & ~y["nr0"].rlike("[0-9]{13}"),
                     F.lit(""),
                 ).otherwise(y["nr0"]),
-                lambda nr: F.filter(
-                    F.array(
-                        F.when(
-                            (y["src"] != "") & (nr != ""),
-                            F.concat(F.lit("("), y["src"], F.lit(")"), nr),
-                        )
-                    ),
-                    lambda v: v.isNotNull(),
-                ),
+                lambda nr: qualified(nr, y["src"]),
             ),
         )
-
-    ids_024 = _let1(
-        F.struct(
-            sub1(f024, "a").alias("raw"),
-            F.coalesce(f024["ind1"], F.lit(" ")).alias("i"),
-            sub1(f024, "2").alias("s2"),
-        ),
-        ids_024_of,
-    )
-
-    scns = F.filter(
-        F.transform(
-            fields_by_tag(marc, "035"),
-            lambda f: _let1(
-                F.coalesce(
-                    try_element_at(_sub_values(f, ["a"]), 1), F.lit("")
+        return F.concat(
+            F.filter(
+                F.concat(
+                    ids_010,
+                    qualified(try_element_at(k, 3), x["s015"]),
+                    qualified(try_element_at(k, 4), x["s016"]),
+                    ids_024,
                 ),
-                lambda a: F.when(a.rlike(_SCN_RE), K.normalize_key(a)),
+                lambda v: v.isNotNull(),
             ),
-        ),
-        lambda v: v.isNotNull(),
-    )
-    return F.concat(ids_010, qualified("015"), qualified("016"), ids_024, scns)
+            F.slice(k, 6, 1000000),
+        )
+
+    return let1(keys, ids_of)
 
 
 def marc_geographic_locations(marc: Column) -> Column:
@@ -1051,9 +1053,10 @@ def marc_geographic_locations(marc: Column) -> Column:
     coordinate order is coped with by swapping (ENVELOPE is minX, maxX,
     maxY, minY).
 
-    Two chained ``transform``s: the first DECODES each 034 into a struct of
-    four decimals, the second formats WKT from the struct's lambda-bound
-    fields. Column trees duplicate per reference — the DMS cascade is ~20k
+    Two chained ``transform``s: the first DECODES each 034 into an array
+    of four decimals (one inner transform, so the cascade appears once,
+    not once per coordinate), the second formats WKT from the array's
+    lambda-bound elements. Column trees duplicate per reference — the DMS cascade is ~20k
     chars and the WKT step reads each coordinate ~8 times, so inlining it
     made this single column a 650k-char expression (seconds of analyzer
     time per query). Binding through the lambda variable keeps each decode
@@ -1063,15 +1066,13 @@ def marc_geographic_locations(marc: Column) -> Column:
         sub = lambda c: F.coalesce(  # noqa: E731
             try_element_at(_sub_values(field, [c]), 1), F.lit("")
         )
-        return F.struct(
-            GEOF.coordinate_to_decimal(sub("d")).alias("w"),
-            GEOF.coordinate_to_decimal(sub("e")).alias("e"),
-            GEOF.coordinate_to_decimal(sub("f")).alias("n"),
-            GEOF.coordinate_to_decimal(sub("g")).alias("s"),
+        return F.transform(
+            F.array(sub("d"), sub("e"), sub("f"), sub("g")),
+            GEOF.coordinate_to_decimal,
         )
 
     def one(d):
-        w, e, n, s = d["w"], d["e"], d["n"], d["s"]
+        w, e, n, s = (try_element_at(d, i) for i in (1, 2, 3, 4))
         w_ok = ~F.isnan(w) & (w >= -180) & (w <= 180)
         n_ok = ~F.isnan(n) & (n >= -90) & (n <= 90)
         e_ok = ~F.isnan(e) & (e >= -180) & (e <= 180)
@@ -1457,9 +1458,10 @@ def _solr_col_builders(m: Column, id_prefix: str | None, memo: dict) -> dict:
         "title_sort": lambda: marc_title(m, for_filing=True),
         "publisher": lambda: marc_publishers(m),
         "publish_year": pubyear,
-        "publishDate": lambda: F.when(
-            pubyear().isNotNull(), F.array(pubyear())
-        ).otherwise(F.array()),
+        "publishDate": lambda: let1(
+            pubyear(),
+            lambda y: F.when(y.isNotNull(), F.array(y)).otherwise(F.array()),
+        ),
         "physical": lambda: _stripped(
             get_fields_subfields(
                 m, [(GET_NORMAL, "300", ["a", "b", "c", "e", "f", "g"])]

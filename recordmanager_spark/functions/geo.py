@@ -21,6 +21,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import StringType
+from recordmanager_spark.sparkcompat import let1
 
 
 def coordinate_to_decimal(col: Column) -> Column:
@@ -31,15 +32,13 @@ def coordinate_to_decimal(col: Column) -> Column:
     fallbacks) and expression trees duplicate per reference — inlined,
     every 034 coordinate carried ~25 copies of its source subtree and the
     4-coordinate WKT column alone was ~48 KB of expression."""
-    v0 = F.regexp_replace(col, " ", "")
-    return F.try_element_at(
-        F.transform(F.array(v0), _coordinate_cascade), F.lit(1)
-    )
+    return let1(F.regexp_replace(col, " ", ""), _coordinate_cascade)
 
 
 def _coordinate_cascade(v: Column) -> Column:
     def sign(hemi: Column, dec: Column) -> Column:
-        return F.when(F.upper(hemi).isin("W", "S") | (hemi == "-"), -dec).otherwise(dec)
+        west_south = F.upper(hemi).isin("W", "S") | (hemi == "-")
+        return let1(dec, lambda d: F.when(west_south, -d).otherwise(d))
 
     # 1: hemisphere + DDDMMSS[.sss]
     p1 = "^([eEwWnNsS])(\\d{3})(\\d{2})((\\d{2})(\\.(\\d{3}))?)"
@@ -87,15 +86,21 @@ def _fmt(c: Column) -> Column:
     # integral floats print without a trailing .0. Coordinates are bounded
     # by ±180, so 14 significant digits = 11-13 decimal places by integer
     # width (60.666666666666664 prints as '60.666666666667' in PHP).
-    a = F.abs(c)
-    r = (
-        F.when(a >= 100, F.round(c, 11))
-        .when(a >= 10, F.round(c, 12))
-        .otherwise(F.round(c, 13))
+    # The value and its rounding are each read 3-4 times: both bound.
+    def rounded(v: Column) -> Column:
+        a = F.abs(v)
+        return (
+            F.when(a >= 100, F.round(v, 11))
+            .when(a >= 10, F.round(v, 12))
+            .otherwise(F.round(v, 13))
+        )
+
+    return let1(
+        let1(c, rounded),
+        lambda r: F.when(
+            r == r.cast("long"), r.cast("long").cast("string")
+        ).otherwise(r.cast("string")),
     )
-    return F.when(
-        r == r.cast("long"), r.cast("long").cast("string")
-    ).otherwise(r.cast("string"))
 
 
 def _poly_centroid(wkt: str) -> str:

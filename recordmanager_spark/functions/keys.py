@@ -23,7 +23,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import StringType
-from recordmanager_spark.sparkcompat import try_element_at
+from recordmanager_spark.sparkcompat import let1, try_element_at
 
 # Common Latin accent folding (lowercase side; input is lowercased first).
 _ACCENTS = "àáâãäåāăąèéêëēĕėęěìíîïĩīĭįıòóôõöøōŏőùúûüũūŭůűųýÿŷçćĉċčñńņňďđĝğġģĥħĵķĺļľłŕŗřśŝşšţťŧŵźżž"
@@ -181,16 +181,11 @@ def normalize_key(col: Column | str, engine: str | None = None) -> Column:
             f"engine must be None, 'table', 'icu', or 'auto': {engine!r}"
         )
     c0 = F.lower(F.col(col) if isinstance(col, str) else col)
-    # let-bind the input through a one-element array: the kana branch
-    # reads it 4x (rlike probe, fold, passthrough, split) and expression
-    # trees duplicate per reference — inlined, every normalize_key call
-    # multiplied its input subtree ~4x in wide extractor plans
-    c = F.try_element_at(
-        F.transform(
-            F.array(c0),
-            lambda v: F.when(v.rlike(_KANA_RANGE_RE), _fold_kana(v)).otherwise(v),
-        ),
-        F.lit(1),
+    # let-bound: the kana branch reads the input 4x (rlike probe, fold,
+    # passthrough, split)
+    c = let1(
+        c0,
+        lambda v: F.when(v.rlike(_KANA_RANGE_RE), _fold_kana(v)).otherwise(v),
     )
     c = F.translate(c, _ACCENTS, _FOLDED)
     for src, dst in _MULTI_FOLD:
@@ -397,7 +392,9 @@ def normalize_isbn(col: Column | str) -> Column:
         + F.substring(digits9, i, 1).cast("int") * (F.lit(11) - i),
     )
     rem = (F.lit(11) - s10 % 11) % 11
-    check10 = F.when(rem == 10, F.lit("X")).otherwise(rem.cast("string"))
+    check10 = let1(
+        rem, lambda r: F.when(r == 10, F.lit("X")).otherwise(r.cast("string"))
+    )
     valid10 = F.upper(F.substring(m, 10, 1)) == check10
     base12 = F.concat(F.lit("978"), digits9)
     s13 = F.aggregate(
@@ -452,39 +449,49 @@ def author_initials(col: Column | str) -> Column:
     p = F.instr(name, ",")
     is_personal = (p > 1) & (p < F.length(name))
     cleaned = F.lower(F.regexp_replace(name, "[^\\p{L} -]", ""))
-    raw_tokens = F.split(cleaned, " ")
-    n_tokens = F.size(raw_tokens)
-    rotated = F.when(
-        is_personal & (n_tokens > 1),
-        F.concat(F.slice(raw_tokens, 2, 100000), F.slice(raw_tokens, 1, 1)),
-    ).otherwise(raw_tokens)
-    initials = F.transform(
-        F.filter(rotated, lambda t: t != ""),
-        lambda t: F.when(
-            (F.instr(t, "-") > 1) & (F.instr(t, "-") < F.length(t)),
-            F.concat(
-                F.substring(t, 1, 1),
+
+    # raw_tokens, result and with_pers are each read 3-6 times below:
+    # bound, so each subtree appears once in the plan (sparkcompat.let1)
+    def from_tokens(raw_tokens: Column) -> Column:
+        n_tokens = F.size(raw_tokens)
+        rotated = F.when(
+            is_personal & (n_tokens > 1),
+            F.concat(F.slice(raw_tokens, 2, 100000), F.slice(raw_tokens, 1, 1)),
+        ).otherwise(raw_tokens)
+        initials = F.transform(
+            F.filter(rotated, lambda t: t != ""),
+            lambda t: F.when(
+                (F.instr(t, "-") > 1) & (F.instr(t, "-") < F.length(t)),
+                F.concat(
+                    F.substring(t, 1, 1),
+                    F.lit(" "),
+                    F.substr(t, F.instr(t, "-") + 1, F.lit(1)),
+                ),
+            ).otherwise(F.substring(t, 1, 1)),
+        )
+
+        def from_result(result: Column) -> Column:
+            smush_all = F.replace(result, F.lit(" "), F.lit(""))
+            smush_pers = F.replace(
+                F.substring(result, 1, F.length(result) - 1).cast("string"),
                 F.lit(" "),
-                F.substr(t, F.instr(t, "-") + 1, F.lit(1)),
-            ),
-        ).otherwise(F.substring(t, 1, 1)),
-    )
-    result = F.array_join(initials, " ")
-    smush_all = F.replace(result, F.lit(" "), F.lit(""))
-    smush_pers = F.replace(
-        F.substring(result, 1, F.length(result) - 1).cast("string"),
-        F.lit(" "),
-        F.lit(""),
-    )
-    with_pers = F.when(
-        (n_tokens > 2) & is_personal & (smush_pers != ""),
-        F.concat(result, F.lit(" "), smush_pers),
-    ).otherwise(result)
-    out = F.when(
-        F.trim(with_pers) != smush_all,
-        F.concat(with_pers, F.lit(" "), smush_all),
-    ).otherwise(with_pers)
-    return F.trim(out)
+                F.lit(""),
+            )
+            with_pers = F.when(
+                (n_tokens > 2) & is_personal & (smush_pers != ""),
+                F.concat(result, F.lit(" "), smush_pers),
+            ).otherwise(result)
+            return let1(
+                with_pers,
+                lambda wp: F.when(
+                    F.trim(wp) != smush_all,
+                    F.concat(wp, F.lit(" "), smush_all),
+                ).otherwise(wp),
+            )
+
+        return let1(F.array_join(initials, " "), from_result)
+
+    return F.trim(let1(F.split(cleaned, " "), from_tokens))
 
 
 def strip_leading_punctuation(

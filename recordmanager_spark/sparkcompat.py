@@ -8,6 +8,9 @@ engine wants (the reference coerces and never errors), but its Python
 wrapper only accepts a Column for the index/key argument.  This shim gives
 ``try_element_at`` the same literal-friendly signature ``element_at`` has,
 so call sites read identically.
+
+Spark SQL also has no ``let``: :func:`let1` supplies one for the
+extractor specs.
 """
 
 from __future__ import annotations
@@ -25,3 +28,27 @@ def try_element_at(col: Column | str, extraction) -> Column:
     if not isinstance(extraction, Column):
         extraction = F.lit(extraction)
     return F.try_element_at(col, extraction)
+
+
+def let1(value: Column, body) -> Column:
+    """Let-bind ``value``: evaluate ``body(v)`` with ``v`` a lambda
+    variable holding ``value``, through a one-element array transform.
+
+    Expression trees duplicate per reference, in the Column API and in
+    the SQL-text twin alike, so a value a spec function reads ``n`` times
+    costs ``n`` copies of its subtree in the parser, the analyzer and
+    (higher-order functions run interpreted) every record's evaluation.
+    Bound, however many times ``body`` reads ``v`` the value's tree
+    appears in the plan once.
+
+    The rule: a Column value that a spec function reads more than once
+    must be bound. Exempt are column, field and lambda-variable
+    references, literals, and scalar expressions over them shorter than
+    200 characters of SQL, where a copy costs less than the binding;
+    ``tests/test_sqltwin.py`` enforces that line on the MARC Solr
+    columns. Bind several values at once through a ``F.struct`` of
+    aliased fields.
+    ``body`` takes exactly one argument: ``F.transform`` passes the
+    element index to a two-argument callable.
+    """
+    return try_element_at(F.transform(F.array(value), body), 1)

@@ -12,8 +12,8 @@ Rebinding works because Python functions resolve module globals at CALL
 time: the module body executes normally (real imports, real pandas_udf
 decorators — those objects are simply never invoked through the twin),
 and afterwards the names the spec functions look up (``F``, ``K``,
-``GEOF``, ``format_col``, ``try_element_at``) are swapped for their
-SQL-text counterparts.
+``GEOF``, ``format_col``, ``try_element_at``, ``let1``) are swapped for
+their SQL-text counterparts.
 
 The twins are built lazily and cached; building one costs a few ms of
 pure Python. ``extractors/marc.py`` consults :func:`marc_twin` to
@@ -45,20 +45,27 @@ def _load(modname: str, overrides: dict) -> types.ModuleType:
     return mod
 
 
-def keys_twin() -> types.ModuleType:
-    return _load(
-        "recordmanager_spark.functions.keys",
+def _compat() -> dict:
+    """Overrides for the ``sparkcompat`` shims a spec module imports."""
+    tw = _load(
+        "recordmanager_spark.sparkcompat",
         {"F": S, "try_element_at": S.try_element_at},
     )
+    return {"try_element_at": S.try_element_at, "let1": tw.let1}
+
+
+def keys_twin() -> types.ModuleType:
+    return _load("recordmanager_spark.functions.keys", {"F": S, **_compat()})
 
 
 def geo_twin() -> types.ModuleType:
-    return _load("recordmanager_spark.functions.geo", {"F": S})
+    return _load("recordmanager_spark.functions.geo", {"F": S, **_compat()})
 
 
 def format_calculator_twin() -> types.ModuleType:
     return _load(
-        "recordmanager_spark.extractors.format_calculator", {"F": S}
+        "recordmanager_spark.extractors.format_calculator",
+        {"F": S, **_compat()},
     )
 
 
@@ -74,7 +81,7 @@ def dedup_twin() -> types.ModuleType:
         "recordmanager_spark.operators.dedup",
         {
             "F": S,
-            "try_element_at": S.try_element_at,
+            **_compat(),
             "author_match_expr": kt.author_match_expr,
             "normalize_key": kt.normalize_key,
             "create_title_key": kt.create_title_key,
@@ -91,7 +98,7 @@ def marc_twin() -> types.ModuleType:
             "K": keys_twin(),
             "GEOF": geo_twin(),
             "format_col": format_calculator_twin().format_col,
-            "try_element_at": S.try_element_at,
+            **_compat(),
             "_IS_SQL_TWIN": True,
         },
     )

@@ -7,6 +7,8 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+import recordmanager_spark.sqlalg as S
+import recordmanager_spark.sqltwin as TW
 from recordmanager_spark.functions import keys as K
 
 
@@ -372,3 +374,35 @@ def test_normalize_key_table_engine_goldens(spark):
     # the JVM fold stays pinned regardless of what auto resolves to
     for raw, expected in [("A -.*B  C", "abc"), ("ÖÄÅöäåüïé", "oaaoaauie")]:
         assert one(spark, K.normalize_key(F.col("v"), engine="table"), raw) == expected
+
+
+@pytest.mark.parametrize(
+    "raw,expected",
+    [
+        # personal names rotate the surname last
+        ("Smith, John", "j s js"),
+        # a hyphenated given name contributes both initials
+        ("Sartre, Jean-Paul", "j p s jps"),
+        ("Jean-Paul Sartre", "j p s jps"),
+        # comma at position 0 or as the last char: not a personal name
+        (",Leading comma", "l c lc"),
+        ("Trailing comma,", "t c tc"),
+        # more than two tokens: the given-names smush is added
+        ("Yeats, William Butler", "w b y wb wby"),
+        ("Mozart, Wolfgang Amadeus Johann", "w a j m waj wajm"),
+        ("One-Two, Jean-Luc Xavier", "j l x o t jlxo jlxot"),
+        # non-Latin letters pass through
+        ("Толстой, Лев Николаевич", "л н т лн лнт"),
+        ("Madonna", "m"),
+        ("", ""),
+        (None, None),
+    ],
+)
+def test_author_initials(spark, raw, expected):
+    """getAuthorInitials, through the Column API and the SQL-text twin."""
+    df = spark.createDataFrame([(raw,)], "v string")
+    twin = TW.keys_twin().author_initials(S.col("v"))
+    row = df.select(
+        K.author_initials("v").alias("c"), F.expr(str(twin)).alias("t")
+    ).first()
+    assert (row["c"], row["t"]) == (expected, expected)

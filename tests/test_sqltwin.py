@@ -314,3 +314,50 @@ def test_parser_conf_pinned_and_asserted(spark):
             SA.assert_parser_conf(spark)
     finally:
         spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
+
+
+def _subtrees(text: str):
+    """Every parenthesized subtree of rendered twin SQL, with the function
+    name before its parenthesis; string literals are skipped."""
+    open_at, i = [], 0
+    while i < len(text):
+        ch = text[i]
+        if ch == "'":
+            i += 1
+            while text[i] != "'":
+                i += 2 if text[i] == "\\" else 1
+        elif ch == "(":
+            j = i
+            while j and (text[j - 1].isalnum() or text[j - 1] == "_"):
+                j -= 1
+            open_at.append(j)
+        elif ch == ")":
+            yield text[open_at.pop(): i + 1]
+        i += 1
+
+
+def test_twin_sql_has_no_repeated_subtree():
+    """Duplication guard: every Column value a spec function reads more
+    than once is let-bound (sparkcompat.let1), so no subtree of 200+
+    characters occurs twice in one twin-compiled Solr column or hidden
+    companion, and all of them together stay under 130 KB of SQL — the
+    text a fresh JVM parses on every deduplicate / update-index run. No
+    literal is exempt: the kana map of normalize_key appears once, as
+    unique_ids normalizes all its inputs in one transform."""
+    import collections
+
+    memo = {"__src": "marc", "__hide__": True}
+    twin = MARC._twin_builders("marc", None, memo)
+    texts = {n: str(b()) for n, b in twin.items() if n not in MARC._TWIN_SKIP}
+    texts.update(memo["__hidden__"])
+    repeated = {}
+    for name, text in texts.items():
+        counts = collections.Counter(
+            t for t in _subtrees(text) if len(t) >= 200
+        )
+        dups = [t for t, c in counts.items() if c > 1]
+        if dups:
+            repeated[name] = max(dups, key=len)[:120]
+    assert not repeated, repeated
+    total = sum(map(len, texts.values()))
+    assert total < 130_000, total

@@ -424,11 +424,14 @@ AUDITS = [
 # into every consumer (the forward_film class — 0.36 MB after its
 # single-parse rewrite, >10 MB before), and re-introducing one-DOM-parse-
 # per-column xpath extraction. MARC/linemarc plans are big by nature
-# (fieldspec trees, no xpath) — their caps only catch growth.
+# (fieldspec trees, no xpath) — their caps only catch growth; they were
+# re-frozen at ~1.3x (2026-10) once every sub-expression a MARC spec
+# function reads more than once was let-bound (0.55 / 1.43 / 0.32 MB,
+# from 3.28 / 11.30 / 3.00 MB).
 SIZE_AUDITS = [
-    ("marc_extract", 7.0, 0),
-    ("marc_rich_extract", 16.0, 0),
-    ("linemarc_extract", 4.5, 0),
+    ("marc_extract", 0.75, 0),
+    ("marc_rich_extract", 1.9, 0),
+    ("linemarc_extract", 0.45, 0),
     ("forward_film_extract", 1.0, 0),
     ("dc_extract", 0.5, 10),
     ("dc_extract_struct", 0.5, 0),
